@@ -29,7 +29,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -123,9 +123,12 @@ class SnapshotCatalog:
     def _write_data(self, name: str, df: DataFrame) -> tuple[str, int, int]:
         sid_dir = os.path.join(self._table_dir(name), "data",
                                f"s{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(sid_dir)
-        # cheap row count from parquet footers (no second job over the plan)
-        n = df.sparkSession.read.parquet(sid_dir).count()
+        # the row count is an observed metric of the write job itself:
+        # a commit is one Spark action, with no read-back of its output
+        obs = Observation()
+        (df.observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(sid_dir))
+        n = obs.get["n"]
         n_parts = sum(1 for f in os.listdir(sid_dir) if f.startswith("part-"))
         return sid_dir, n, n_parts
 

@@ -31,6 +31,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from axora_spark.session import local_frame
+
+_OVERRIDES = T.StructType([T.StructField("host", T.StringType()),
+                           T.StructField("_ovr", T.IntegerType())])
 
 
 def _order_cols():
@@ -95,10 +101,10 @@ def admit(frontier: DataFrame, host_budget: int, salt: int = 8,
         or budget_frame is not None
     srcs: list = []
     if budget_overrides:
-        spark = frontier.sparkSession
-        bdf = spark.createDataFrame(
+        bdf = local_frame(
+            frontier.sparkSession,
             [(h, int(b)) for h, b in budget_overrides.items()],
-            "host string, _ovr int")
+            _OVERRIDES)
         frontier = frontier.join(F.broadcast(bdf), on="host", how="left")
         srcs.append(F.col("_ovr"))
     if budget_frame is not None:

@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from axora_spark import schemas
 from axora_spark.catalog import SnapshotCatalog
@@ -36,7 +37,12 @@ from axora_spark.operators.frontier import (anti_join_seen,
                                             build_seen_filters,
                                             dedup_within_wave)
 from axora_spark.operators.urls import canonicalize_udf, host_col, url_hash
+from axora_spark.session import local_frame
 from axora_spark.sources.fetch import corpus_from_link_graph, fetch_from_corpus
+
+_SEEDS = T.StructType([T.StructField("raw_url", T.StringType())])
+_FLOORS = T.StructType([T.StructField("host", T.StringType()),
+                        T.StructField("_floor_ms", T.DoubleType())])
 
 
 @dataclass
@@ -70,7 +76,7 @@ def _load_state(catalog: SnapshotCatalog) -> dict | None:
 
 def seed_frontier(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
     """Wave-0 frontier from the seed list (S1; cmd/main.go:143-146)."""
-    seeds = spark.createDataFrame([(s,) for s in cfg.seeds], "raw_url string")
+    seeds = local_frame(spark, [(s,) for s in cfg.seeds], _SEEDS)
     df = (seeds
           .withColumn("url", canonicalize_udf(F.col("raw_url")))
           .filter(F.col("url") != "")
@@ -105,7 +111,7 @@ def _record_lineage(spark: SparkSession, catalog: SnapshotCatalog, wave: int,
                     entries: list[tuple[str, int, int, int]]) -> None:
     rows = [(wave, t, int(sid), int(n), int(p)) for t, sid, n, p in entries]
     catalog.append(spark, "lineage",
-                   spark.createDataFrame(rows, schemas.LINEAGE))
+                   local_frame(spark, rows, schemas.LINEAGE))
 
 
 def expire_history(spark: SparkSession, catalog: SnapshotCatalog,
@@ -193,7 +199,7 @@ def _rollback_incomplete_wave(spark: SparkSession, catalog: SnapshotCatalog,
         keep = [(r.wave, r.table, r.snapshot_id, r.n_rows, r.n_partitions)
                 for r in rows if r.wave < next_wave]
         catalog.overwrite(spark, "lineage",
-                          spark.createDataFrame(keep, schemas.LINEAGE))
+                          local_frame(spark, keep, schemas.LINEAGE))
 
 
 def _pagerank_priorities(spark: SparkSession, catalog: SnapshotCatalog,
@@ -397,9 +403,8 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
             from axora_spark.operators import adaptive
             floors = None
             if robots_delays_ms:
-                floors = spark.createDataFrame(
-                    [(h, d) for h, d in robots_delays_ms.items()],
-                    "host string, _floor_ms double")
+                floors = local_frame(
+                    spark, robots_delays_ms.items(), _FLOORS)
             adaptive_frame = adaptive.budgets_from_state(
                 catalog.read(spark, "fetch_state"),
                 num_ms=cfg.per_host_parallelism * cfg.wave_seconds
@@ -530,30 +535,31 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
                                         salt=cfg.hot_host_salt)
         sid_frontier = catalog.overwrite(spark, "frontier", nxt)
 
-        # A5 — metrics (per wave × host); deduped = rows removed from the
-        # discovered∪deferred union by U1 collapse + the seen anti-join
-        pre_by_host = union.groupBy("host").agg(
-            F.count("*").alias("_pre"))
-        post_by_host = (catalog.read(spark, "frontier").groupBy("host")
-                        .agg(F.count("*").alias("_post")))
-        dedup_by_host = (pre_by_host.join(post_by_host, "host", "left")
-                         .na.fill(0, ["_post"])
-                         .select("host",
-                                 (F.col("_pre") - F.col("_post"))
-                                 .alias("deduped")))
-        union.unpersist()
-        cand_by_host = candidates.groupBy("host").agg(
-            F.count("*").alias("candidates"))
-        adm_by_host = admitted.groupBy("host").agg(
-            F.count("*").alias("admitted"))
-        met = (cand_by_host.join(adm_by_host, "host", "left")
-               .join(dedup_by_host, "host", "left")
-               .na.fill(0, ["admitted", "deduped"])
+        # A5 — metrics (per wave × host) in ONE groupBy over a tagged
+        # union of the cached candidates/admitted/union frames and the
+        # just-written frontier: no UDF or anti-join re-runs. deduped =
+        # rows removed from the discovered∪deferred union by U1 collapse,
+        # the seen anti-join and the frontier gates (union minus the
+        # persisted frontier); rows only for hosts with candidates.
+        def _tag(df, c, a, d):
+            return df.select("host", F.lit(c).alias("_c"),
+                             F.lit(a).alias("_a"), F.lit(d).alias("_d"))
+        met = (_tag(candidates, 1, 0, 0)
+               .unionByName(_tag(admitted, 0, 1, 0))
+               .unionByName(_tag(union, 0, 0, 1))
+               .unionByName(_tag(catalog.read(spark, "frontier"), 0, 0, -1))
+               .groupBy("host")
+               .agg(F.sum("_c").alias("candidates"),
+                    F.sum("_a").alias("admitted"),
+                    F.sum("_d").alias("deduped"))
+               .filter(F.col("candidates") > 0)
                .select(F.lit(wave).alias("wave"), "host", "candidates",
                        "admitted",
-                       (F.col("candidates") - F.col("admitted")).alias("deferred"),
-                       F.col("deduped").cast("long")))
+                       (F.col("candidates") - F.col("admitted"))
+                       .alias("deferred"),
+                       "deduped"))
         sid_met = catalog.append(spark, "metrics", met)
+        union.unpersist()
 
         frontier_meta = catalog.snapshots("frontier")[-1]
         lineage_entries = [

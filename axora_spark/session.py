@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -95,3 +96,14 @@ def get_spark(
             str(max(8, spark.sparkContext.defaultParallelism)))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side rows as a local relation: Arrow-encoded on the driver
+    and scanned by LocalTableScan, so no RDD is scheduled and no Python
+    worker starts (`createDataFrame(list)` parallelizes a Python RDD and
+    costs a scan stage per use). Empty `rows` take pyspark's non-Arrow
+    path: still correct, just not local."""
+    import pandas as pd
+    return spark.createDataFrame(
+        pd.DataFrame(list(rows), columns=schema.fieldNames()), schema)

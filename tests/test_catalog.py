@@ -122,3 +122,41 @@ def test_expire_snapshots_bounds_disk(spark, catalog):
     # expired data dirs are gone from disk
     data_root = os.path.join(catalog.root, "t", "data")
     assert len(os.listdir(data_root)) == 1
+
+
+def test_snapshot_n_rows_equals_rows_written(spark, catalog):
+    """Every commit's n_rows is the number of rows its write produced:
+    append, overwrite, compact, both merges, an all-duplicate merge batch
+    (skip_empty commits nothing) and an empty frame."""
+    catalog.create_table("t", SCHEMA)
+
+    def check(sid, want):
+        assert catalog.current_snapshot("t") == sid
+        snap = catalog.snapshots("t")[-1]
+        assert snap["id"] == sid
+        assert snap["n_rows"] == want
+        new_dir = snap["dirs"][-1]
+        assert spark.read.schema(SCHEMA).parquet(new_dir).count() == want
+
+    def frame(rows):
+        return spark.createDataFrame(rows, SCHEMA)
+
+    check(catalog.append(spark, "t", frame([(1, "a"), (2, "b"), (3, "c")])),
+          3)
+    check(catalog.overwrite(spark, "t", frame([(4, "d"), (5, "e")])), 2)
+    catalog.append(spark, "t", frame([(6, "f")]))
+    check(catalog.compact(spark, "t"), 3)
+    # two keys already present, one new key duplicated within the batch
+    check(catalog.merge_insert_if_absent(
+        spark, "t", frame([(4, "x"), (5, "y"), (7, "g"), (7, "gg")]), "k"),
+        1)
+    n_snaps = len(catalog.snapshots("t"))
+    cur = catalog.current_snapshot("t")
+    assert catalog.merge_insert_if_absent(
+        spark, "t", frame([(4, "x"), (7, "z")]), "k") == cur
+    assert len(catalog.snapshots("t")) == n_snaps
+    # upsert rewrites the whole table: 4 existing keys + 1 new
+    check(catalog.merge_upsert_latest(
+        spark, "t", frame([(4, "zz"), (8, "h")]), "k", "v"), 5)
+    assert catalog.read(spark, "t").count() == 5
+    check(catalog.append(spark, "t", frame([])), 0)

@@ -65,3 +65,50 @@ def test_bloom_path_identical(spark, catalog, cfg, fixture_pages):
     assert got_admitted == want.admitted
     got_seen = {r.url for r in catalog.read(spark, "seen").collect()}
     assert got_seen == want.seen
+
+
+@pytest.mark.parametrize("bloom_threshold", [100_000, 1])
+def test_metrics_table_matches_oracle(spark, catalog, cfg, fixture_pages,
+                                      bloom_threshold):
+    """Pin the A5 metrics table (wave × host): per-wave sums of
+    candidates/admitted/deferred equal the oracle's per-wave counts, rows
+    exist only for hosts with candidates, per-host admitted equals the
+    admitted table, deferred = candidates − admitted, and deduped is the
+    discovered∪deferred rows the next frontier did not keep."""
+    want = oracle.simulate(fixture_pages, cfg).per_wave_metrics
+    _run_engine(spark, catalog, cfg, fixture_pages,
+                bloom_threshold=bloom_threshold)
+    rows = catalog.read(spark, "metrics").collect()
+    assert rows
+
+    keys = [(r.wave, r.host) for r in rows]
+    assert len(keys) == len(set(keys))
+    for r in rows:
+        assert r.candidates > 0, r
+        assert r.deferred == r.candidates - r.admitted, r
+        assert r.deduped >= 0, r
+
+    fields = ("candidates", "admitted", "deferred", "deduped")
+    sums: dict[int, dict[str, int]] = {}
+    for r in rows:
+        s = sums.setdefault(r.wave, dict.fromkeys(fields, 0))
+        for k in fields:
+            s[k] += getattr(r, k)
+    assert sorted(sums) == [m["wave"] for m in want]
+    for m in want:
+        got = sums[m["wave"]]
+        assert [got[k] for k in fields[:3]] == \
+            [m[k] for k in fields[:3]], m["wave"]
+
+    adm = {(r.wave, r.host): r.n for r in catalog.read(spark, "admitted")
+           .groupBy("wave", "host").count()
+           .withColumnRenamed("count", "n").collect()}
+    assert adm == {(r.wave, r.host): r.admitted for r in rows
+                   if r.admitted > 0}
+
+    # deduped = |discovered ∪ deferred| − |next frontier|, per wave
+    nxt = {r.wave: r.n_rows for r in catalog.read(spark, "lineage")
+           .filter("`table` = 'frontier' AND wave >= 0").collect()}
+    for m in want:
+        assert sums[m["wave"]]["deduped"] == \
+            m["links_discovered"] + m["deferred"] - nxt[m["wave"]], m

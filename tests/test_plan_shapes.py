@@ -31,6 +31,22 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(df) -> list[str]:
+    """Node names of df's physical plan, walking children only: the plans
+    of cached relations (InMemoryTableScan's inner children, which the
+    plan string prints) are not part of what the query executes."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node.nodeName())
+        if out[-1] == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def test_simhash_single_hash_pass(spark):
     from axora_spark.queries import q_simhash
     plan = _optimized(q_simhash(spark, SF))
@@ -519,3 +535,70 @@ def test_neardup_incremental_single_signature_pass(spark):
     plan = _physical(q_neardup_incremental(spark, SF))
     assert plan.count("Scan parquet") == 0
     assert "ExistingRDD" in plan
+
+
+def test_crawl_metrics_write_reads_only_cache(spark, catalog):
+    """The A5 metrics append aggregates the wave's CACHED frames (plus
+    the just-written frontier): its plan may not re-run link extraction
+    (ArrowEvalPython) or the seen-filter cogroup (FlatMapCoGroupsInPandas)
+    — once `union` was unpersisted before the metrics append and every
+    wave recomputed both."""
+    from axora_spark import datagen, schemas
+    from axora_spark.catalog import SnapshotCatalog
+    from axora_spark.plans import crawl
+
+    plans: list[list[str]] = []
+
+    class MetricsPlans(SnapshotCatalog):
+        def append(self, spark, name, df, skip_empty=False):
+            if name == "metrics":
+                plans.append(_plan_nodes(df))
+            return super().append(spark, name, df, skip_empty=skip_empty)
+
+    pages = datagen.link_graph_rows(n_pages=120, seed=42)
+    crawl.run_crawl(spark, MetricsPlans(catalog.root),
+                    datagen.fixture_config(pages),
+                    spark.createDataFrame(pages, schemas.LINK_GRAPH),
+                    bloom_threshold=1)
+    assert len(plans) >= 3
+    for nodes in plans:
+        assert "InMemoryTableScan" in nodes
+        assert "ArrowEvalPython" not in nodes, nodes
+        assert "FlatMapCoGroupsInPandas" not in nodes, nodes
+
+
+def _jobs_of(spark, fn) -> int:
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_commit_runs_one_job(spark, catalog):
+    """A commit is exactly one Spark job — the write; its row count is an
+    observed metric of that job, not a re-read of the output."""
+    from pyspark.sql import types as T
+    from axora_spark.session import local_frame
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("v", T.StringType())])
+    catalog.create_table("t", schema)
+    df = local_frame(spark, [(1, "a"), (2, "b"), (3, "c")], schema)
+    assert _jobs_of(spark, lambda: catalog.append(spark, "t", df)) == 1
+    assert _jobs_of(spark, lambda: catalog.overwrite(spark, "t", df)) == 1
+    assert catalog.snapshots("t")[-1]["n_rows"] == 3
+
+
+def test_local_frame_is_local_table_scan(spark):
+    """Driver-built frames (lineage rows, seeds, budget overrides) scan
+    as a LocalTableScan, never a parallelized Python RDD."""
+    from axora_spark import schemas
+    from axora_spark.session import local_frame
+    df = local_frame(spark, [(0, "frontier", 3, 10, 2)], schemas.LINEAGE)
+    assert _plan_nodes(df) == ["LocalTableScan"]
+    assert [tuple(r) for r in df.collect()] == [(0, "frontier", 3, 10, 2)]
